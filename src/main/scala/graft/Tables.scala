@@ -17,8 +17,8 @@ object Tables {
 
   /** Schema memo (r17): every bare `spark.read.parquet` pays footer-read
     * schema inference + file-index construction on the DRIVER — measured
-    * 74-100 ms/call vs 6-8 ms with an explicit schema (SchemaProbe,
-    * lineitem at sf0.1), and the bench constructs ~1.5 table frames per
+    * 74-100 ms/call vs 6-8 ms with an explicit schema (lineitem at
+    * sf0.1, OPTIMIZATION_r17.md §5), and the bench constructs ~1.5 table frames per
     * query × 108 queries, so inference alone was >10 s of single-threaded
     * driver time per bench (guide §7.3's "planning/listing" class; at a
     * real lake the schema comes from the catalog, not per-query footer

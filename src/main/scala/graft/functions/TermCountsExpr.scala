@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Purpose (round 13): the SHUFFLE-FREE form of a term-frequency table —
   * per-document counting inside the scan replaces x12's corpus-wide
   * `explode` → `groupBy(doc_id, term)` exchange. Measured honestly at the
-  * 100x replica (X12Probe): LOCALLY an anti-lever — the query's dominant
+  * 100x replica (NOTES.md Round 14, u2/x12 item): LOCALLY an anti-lever — the query's dominant
   * cost is the 28M-row InMemoryRelation build (~12 s), the local NVMe
   * shuffle is nearly free, and this expression's row boxing
   * (TreeMap + GenericInternalRow output) costs real CPU, so the

@@ -84,7 +84,7 @@ object BlockCompress {
     *
     * Anchors are generated ONLY for chroms a hash partition cannot level
     * on its own (> half a balanced partition's share) — same hot-chrom
-    * filter as `OverlapSuppress.suppressSegmented` (W3Probe, round 13):
+    * filter as `OverlapSuppress.suppressSegmented` (NOTES.md Round 14, w3 item):
     * with many tiny chroms (the events replica has 150k) the per-chrom
     * sample rate bottoms out at 1 and EVERY solo record would be
     * collected to the driver for zero balancing benefit. Tiny chroms ride
@@ -146,7 +146,7 @@ object BlockCompress {
   }
 
   /** Regime dispatch from ONE partial-aggregated per-chrom count — the
-    * mirror of `OverlapSuppress.suppressAuto` (W3Probe, round 13): when no
+    * mirror of `OverlapSuppress.suppressAuto` (NOTES.md Round 14, w2/w3 items): when no
     * chrom exceeds half a balanced partition's share, plain hash
     * partitioning already levels the automaton and the segmented path's
     * anchor machinery is pure overhead (at the 100x events replica — 150k

@@ -16,21 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Pointer jumping is ON at every size (threshold 0) since r17. The old
-    * 2^18-node floor assumed each jump costs a fixed ~seconds
-    * localCheckpoint; measured at bench scale (CcProbe, sf0.1, V=1140,
-    * 3 interleaved reps) a small-V checkpoint is ~0.2 s while the chain
-    * rounds jumping erases are whole E-sized join+checkpoint rounds:
-    * jump-always converged in 3 propagation rounds vs 5 (changed
-    * 60→1→0 vs 45→15→1→1→0) and won the wall every rep (5.41→4.07,
-    * 3.19→2.46 s; identical label checksums). The 100x evidence already
-    * favored jumping (312→122 s skewed, 128→104 uniform, r11), so the
-    * floor only ever protected a mis-measured regime. This is a
-    * compile-time constant, not a runtime knob: restoring the threshold
-    * means editing this value (the count branch below it is then live
-    * again); CcProbe carries its own loop replica for runtime A/Bs. */
-  val JumpMinNodes: Long = 0L
-
   /** Lineage-truncating checkpoint per round: RELIABLE (checkpoint-dir
     * parquet round-trip) when the session has a checkpoint dir configured
     * (cluster posture — localCheckpoint blocks die with their executor,
@@ -134,7 +119,15 @@ object Dedup {
   }
 
   /** (id, component) for every id appearing in `pairs`; component = min id
-    * reachable. Runs until fixpoint or `maxIter`. */
+    * reachable. Runs until fixpoint or `maxIter`.
+    *
+    * Pointer jumping runs at every graph size. An older 2^18-node floor
+    * assumed each jump cost a fixed ~seconds checkpoint; at sf0.1 (V=1140)
+    * a small-V checkpoint measured ~0.2 s, and jumping converged in 3
+    * propagation rounds instead of 5 with identical label checksums
+    * (OPTIMIZATION_r17.md §1). Since round 18 the jump follows the
+    * previous round's labels, one checkpoint per round
+    * (OPTIMIZATION_r18.md §2). */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
     val chain = new CkptChain(pairs.sparkSession)
     def cp(df: DataFrame): DataFrame = chain.cp(df)
@@ -163,10 +156,6 @@ object Dedup {
     var labels = cp(edges.groupBy(col("dst"))
       .agg(min(col("src")).as("_nmin"))
       .select(col("dst").as("id"), least(col("dst"), col("_nmin")).as("comp")))
-    // short-circuit at threshold 0: no node-count job at all (one fewer
-    // action per CC invocation; the count is a checkpoint scan, but it is
-    // still a scheduled job × 5 CC calls per bench)
-    val jump = JumpMinNodes <= 0 || labels.count() >= JumpMinNodes
     var iter = 1 // round 1 already ran above
     var converged = false // round 1 always changes the larger end of some pair
     while (iter < maxIter && !converged) {
@@ -191,17 +180,14 @@ object Dedup {
       // is unchanged: convergence is decided by `changed == 0`, any
       // monotone within-component map keeps every comp >= its component
       // min, and a stable labeling under the neighbor round alone is
-      // already constant-per-component (the r17 argument). CcProbe A/B
-      // (sf0.1 + /tmp/sf100): identical round counts and checksums, each
-      // round cheaper locally. Applies from overall round 2 on and at
-      // EVERY graph size since r17 (see JumpMinNodes).
+      // already constant-per-component (the r17 argument). Measured at
+      // sf0.1 and the 100x replica: identical round counts and checksums,
+      // each round cheaper locally (OPTIMIZATION_r18.md §2).
+      val j = labels.select(col("id").as("_jid"), col("comp").as("_jcomp"))
       val updated = cp(
-        if (jump) {
-          val j = labels.select(col("id").as("_jid"), col("comp").as("_jcomp"))
-          cand.join(j, cand("_c1") === j("_jid"), "left")
-            .select(col("id"), col("_old"),
-              least(col("_c1"), coalesce(col("_jcomp"), col("_c1"))).as("comp"))
-        } else cand.select(col("id"), col("_old"), col("_c1").as("comp")))
+        cand.join(j, cand("_c1") === j("_jid"), "left")
+          .select(col("id"), col("_old"),
+            least(col("_c1"), coalesce(col("_jcomp"), col("_c1"))).as("comp")))
       val changed = updated.filter(col("comp") =!= col("_old")).count()
       labels = updated.select("id", "comp")
       converged = changed == 0
@@ -230,69 +216,14 @@ object Dedup {
     * DedupSpec pins equality to the from-scratch CC on merge / new-node /
     * untouched-cluster cases plus a randomized fuzz.
     *
-    * Round 18 note: the cluster-contraction form
-    * ([[incrementalComponentsContracted]]) was built and measured against
-    * this (IncProbe, checksum-asserted): at the 100x replica it won only
-    * 5-9% inside the probe's noise band, and at bench scale (sf0.1) it
-    * REGRESSED x18/x23 by ~0.9 s each — the extra endpoint/relabel joins
-    * cost more than the batch-proportional CC saves on a box where a
-    * V-sized round is already sub-second. Kept as the documented
-    * alternative for genuinely corpus >> batch deployments; this union
-    * form stays the registered operator on measurement. */
+    * Round 18 measured a cluster-contraction alternative (CC over the
+    * batch's rep edges only): 5-9% faster at the 100x replica, inside the
+    * noise, and ~0.9 s slower on x18/x23 at sf0.1, so this union form
+    * stays (OPTIMIZATION_r18.md §3). */
   def incrementalComponents(labels: DataFrame, newEdges: DataFrame): DataFrame =
     connectedComponents(
       labels.select(col("id").as("doc_a"), col("comp").as("doc_b"))
         .unionByName(newEdges.select("doc_a", "doc_b")))
-
-  /** CLUSTER-CONTRACTION alternative to [[incrementalComponents]] (round
-    * 18, VERDICT r17 #3) — measured and NOT registered; see the note
-    * there. Instead of a second full CC over the V-sized union it:
-    *
-    *   1. maps each new edge's endpoints through the old labeling
-    *      (left join ×2; an endpoint absent from `labels` is its own rep);
-    *   2. drops contracted self-loops (within-cluster batch pairs cannot
-    *      change the partition);
-    *   3. runs CC over the contracted (repA, repB) edges — nodes are
-    *      touched cluster reps and new doc ids, so the iterative rounds
-    *      scale with the BATCH, never the corpus;
-    *   4. relabels: base = old rows ∪ new-endpoint singletons; one join of
-    *      base.comp against the merged labeling, coalesce keeps untouched
-    *      clusters verbatim.
-    *
-    * Exactness (the union proof, quotiented): quotient CC(stars ∪ new) by
-    * the old clusters — two nodes share a component iff their reps are
-    * connected in the contracted graph (within-cluster hops are free under
-    * contraction; new edges map to rep edges). Each rep IS its cluster's
-    * min id and each new node is its own rep, so min-reachable over the
-    * contracted component equals the union component's min id; reps in no
-    * surviving contracted edge keep their old comp via the left-join
-    * coalesce. Self-rows and batch self-pairs survive as base singletons.
-    * DedupSpec pins partition equality to from-scratch CC (rep chains,
-    * self-pairs, new-only batches, randomized fuzz); IncProbe asserts
-    * checksum identity to the union form and carries the A/B numbers. */
-  def incrementalComponentsContracted(labels: DataFrame, newEdges: DataFrame): DataFrame = {
-    val l = labels.select(col("id"), col("comp"))
-    val contracted = newEdges.select("doc_a", "doc_b")
-      .join(l.select(col("id").as("doc_a"), col("comp").as("_ca")), Seq("doc_a"), "left")
-      .join(l.select(col("id").as("doc_b"), col("comp").as("_cb")), Seq("doc_b"), "left")
-      .select(coalesce(col("_ca"), col("doc_a")).as("doc_a"),
-        coalesce(col("_cb"), col("doc_b")).as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b"))
-    // deliberately NOT .distinct()'d: contraction does collapse many batch
-    // pairs onto one rep edge, but CC's edge persist repartitions the rows
-    // anyway, and the measured distinct arm (IncProbe, /tmp/sf100) paid its
-    // extra blocking shuffle without beating the plain form
-    val merged = connectedComponents(contracted)
-      .select(col("id").as("_rid"), col("comp").as("_rcomp"))
-    val newNodes = newEdges.select(col("doc_a").as("id"))
-      .unionByName(newEdges.select(col("doc_b").as("id")))
-      .distinct()
-      .join(l, Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("comp"))
-    val base = l.unionByName(newNodes)
-    base.join(merged, base("comp") === col("_rid"), "left")
-      .select(base("id"), coalesce(col("_rcomp"), base("comp")).as("comp"))
-  }
 
   /** Every document mapped to its canonical id: cluster minimum for members
     * of a duplicate cluster, itself otherwise. `docs` needs a `doc_id`. */

@@ -36,12 +36,13 @@ object OverlapSuppress {
   }
 
   /** Dispatch between [[suppress]] and [[suppressSegmented]] on the actual
-    * key distribution — the round-13 W3Probe finding: at the 100x events
-    * replica (150k chroms, ~67 rows each) the segmented path cost 14-29 s
-    * where plain hash-partitioning ran the same automaton in 1.5 s,
-    * because segmentation's anchor machinery (63 candidates x EVERY
-    * chrom = 4.4 M anchors collected to the driver) only repays itself
-    * when single chroms dominate whole partitions. The decision pass is
+    * key distribution — the round-13 w3 finding (NOTES.md Round 14): at
+    * the 100x events replica (150k chroms, ~67 rows each) the segmented
+    * path cost 14-29 s where plain hash-partitioning ran the same
+    * automaton in 1.5 s, because segmentation's anchor machinery (63
+    * candidates x EVERY chrom = 4.4 M anchors collected to the driver)
+    * only repays itself when single chroms dominate whole partitions.
+    * The decision pass is
     * one partial-aggregated per-chrom count (output = #chroms rows, a
     * metadata-scale shuffle even at 100 TB): segment only if the largest
     * chrom exceeds half a balanced partition's share — i.e. hash
@@ -88,7 +89,7 @@ object OverlapSuppress {
     // it ONCE so they scan the cache instead of re-deriving from source
     // each time (4 source scans -> 1). Local A/B at the 100x replica is
     // NEUTRAL (cache build cost ~ 3 saved columnar parquet scans). Under
-    // a measured object-store latency shim (ObjStoreProbe / OBJSTORE.json)
+    // a measured object-store latency shim (OBJSTORE.json, NOTES.md Round 12)
     // the lever is REGIME-DEPENDENT: with files ≈ cores the per-open
     // latency amortizes across parallel tasks and 4 scans beat the cache
     // build (0.94 vs 2.56 s at 25 ms/open, 64 files/32 cores), while in
@@ -117,7 +118,7 @@ object OverlapSuppress {
     // only the giants pay the split machinery. Without this filter the
     // candidate set is 63 x #chroms rows, all broadcast, all collected —
     // 4.4 M driver-side anchors at the 100x events replica for zero
-    // balancing benefit (W3Probe, round 13).
+    // balancing benefit (NOTES.md Round 14, w3 item).
     val parts0 = ds.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val hotMin = ChromDispatch.hotMin(total, parts0)
     val cand = stats.filter(col("cnt") > hotMin)

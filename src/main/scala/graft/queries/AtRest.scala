@@ -11,8 +11,9 @@ import graft.Tables
   * (doc_id, term, tf) term-frequency table, the corpus row count recorded
   * at ingest, and the previous resolve's duplicate-cluster labels.
   *
-  * This is the round-13 AtRestProbe economics promoted to first-class,
-  * oracle-gated queries (VERDICT r13 #1/#2): an ingest job pays the
+  * This is the round-13 at-rest economics (NOTES.md "Round 13, second
+  * session") promoted to first-class, oracle-gated queries (VERDICT r13
+  * #1/#2): an ingest job pays the
   * corpus tokenize/hash pass ONCE (`x19_atrest_build`, `x22_labels_build`
   * — both price the build honestly by overwriting unconditionally), and
   * every consumer (`x20_atrest_tfidf`, `x21_atrest_pairs`,
@@ -458,46 +459,37 @@ object AtRest {
       // still runs strictly AFTER tf lands (it reads the WRITTEN tf
       // table — the consistency contract). Each build publishes its own
       // table through the unchanged temp+rename+marker protocol, so
-      // contents are byte-identical to the sequential form.
-      // A/B knob (spark.graft.atrest.parallelBuild=false restores the
-      // sequential form) so the overlap stays measurable per window.
-      if (s.conf.get("spark.graft.atrest.parallelBuild", "true").toBoolean) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-        val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          val builds = Seq(
-            scala.concurrent.Future(buildSignatures(s, d, st, overwrite = true))(ec),
-            scala.concurrent.Future {
-              buildTf(s, d, st, overwrite = true)
-              buildDf(s, st, overwrite = true)
-            }(ec),
-            scala.concurrent.Future(buildMeta(s, d, st, overwrite = true))(ec))
-          // await EVERY future before propagating any failure (r17 review):
-          // a fail-fast Future.sequence rethrows while sibling builds are
-          // still overwrite-publishing — orphan threads would then race the
-          // caller's NEXT query (e.g. x20's tf ensure inside an orphan
-          // delete→rename window) and their Spark jobs would pollute every
-          // subsequently timed query. With all builds joined, failure
-          // leaves no in-flight work; first error wins.
-          val outcomes = builds.map(f =>
-            scala.util.Try(scala.concurrent.Await.result(
-              f, scala.concurrent.duration.Duration.Inf)))
-          // first error wins; sibling failures ride along as suppressed
-          // so a double-fault run keeps both diagnostics (ADVICE r17)
-          val failures = outcomes.collect { case scala.util.Failure(e) => e }
-          failures.headOption.foreach { first =>
-            failures.drop(1).foreach { e =>
-              if (e ne first) first.addSuppressed(e)
-            }
-            throw first
+      // contents are byte-identical to building them one after another.
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+      val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      try {
+        val builds = Seq(
+          scala.concurrent.Future(buildSignatures(s, d, st, overwrite = true))(ec),
+          scala.concurrent.Future {
+            buildTf(s, d, st, overwrite = true)
+            buildDf(s, st, overwrite = true)
+          }(ec),
+          scala.concurrent.Future(buildMeta(s, d, st, overwrite = true))(ec))
+        // await EVERY future before propagating any failure (r17 review):
+        // a fail-fast Future.sequence rethrows while sibling builds are
+        // still overwrite-publishing — orphan threads would then race the
+        // caller's NEXT query (e.g. x20's tf ensure inside an orphan
+        // delete→rename window) and their Spark jobs would pollute every
+        // subsequently timed query. With all builds joined, failure
+        // leaves no in-flight work; first error wins.
+        val outcomes = builds.map(f =>
+          scala.util.Try(scala.concurrent.Await.result(
+            f, scala.concurrent.duration.Duration.Inf)))
+        // first error wins; sibling failures ride along as suppressed
+        // so a double-fault run keeps both diagnostics (ADVICE r17)
+        val failures = outcomes.collect { case scala.util.Failure(e) => e }
+        failures.headOption.foreach { first =>
+          failures.drop(1).foreach { e =>
+            if (e ne first) first.addSuppressed(e)
           }
-        } finally pool.shutdown()
-      } else {
-        buildSignatures(s, d, st, overwrite = true)
-        buildTf(s, d, st, overwrite = true)
-        buildDf(s, st, overwrite = true)
-        buildMeta(s, d, st, overwrite = true)
-      }
+          throw first
+        }
+      } finally pool.shutdown()
       storeSummary(s, st)
     },
     // ----- X20: TF-IDF top-k from the at-rest tf + df tables + recorded
@@ -519,7 +511,8 @@ object AtRest {
     },
     // ----- X21: LSH candidate pairs + est-sim from the at-rest signature
     // table — the pair pass every re-run/backfill executes at a lake
-    // (AtRestProbe r13: −47% vs from-raw). Same band automaton as d3,
+    // (r13: −47% vs from-raw; NOTES.md "Round 13, second session"). Same
+    // band automaton as d3,
     // same oracle.
     "x21_atrest_pairs" -> { (s, d) =>
       val st = resolve(s, d)

@@ -264,8 +264,8 @@ object Curation {
     * any exact-broadcast budget. Output is exactly equal to the exact
     * form (the verify join removes the sketch's false positives).
     *
-    * Measured (X15Probe, round 13, 30M-key at-rest pool vs the 100x
-    * corpus): single-node NEUTRAL — exact 31.6/32.2 s vs bloom
+    * Measured (round 13, 30M-key at-rest pool vs the 100x corpus;
+    * NOTES.md Round 14): single-node NEUTRAL — exact 31.6/32.2 s vs bloom
     * 30.2/40.3 s — and that neutrality is itself the finding: on
     * local[32] a broadcast never crosses a network, so the exact form's
     * true scale cost (pool-bytes x executor-count of replication, plus a
@@ -285,12 +285,12 @@ object Curation {
     *
     * Measured twice on the real 2-executor standalone cluster at a
     * 30M-hash pool (outputs row-identical every rep, both rounds).
-    * ClusterProbe r15: exact broadcast 50.0/63.3 s clean reps vs bloom
-    * 214/342/400 s — but r17 found that bloom arm was running a silently
+    * r15 (NOTES.md Round 15): exact broadcast 50.0/63.3 s clean reps vs
+    * bloom 214/342/400 s — but r17 found that bloom arm was running a silently
     * CLAMPED ~94%-FPP sketch (see [[buildPoolBloom]]), so most of its
     * loss was the verify join eating the unfiltered corpus, not the
-    * partial-shipping mechanism r15 blamed. ClusterProbe r17, sized
-    * sketch [slow noisy window, spin ~2.0]: exact 174/451/148 s vs bloom
+    * partial-shipping mechanism r15 blamed. r17 (NOTES.md Round 17),
+    * sized sketch [slow noisy window, spin ~2.0]: exact 174/451/148 s vs bloom
     * 542/350/113 s — comparable same-order arms now, exact winning 2/3
     * reps. The cap therefore stands on the composite case: exact is
     * still competitive-to-winning at 30M, and its OTHER leg is safety —
@@ -313,21 +313,21 @@ object Curation {
     * optimizer's injected join filters, not user sketches). At a 30M-key
     * pool and fpp=0.01 the documented sizing is 287.8M bits / 36 MB; the
     * clamped sketch is 67.1M bits / 8.4 MB with hash count derived from
-    * the clamped 4M items — measured empirical FPP ≈ 0.94 (BloomCapProbe),
-    * i.e. the prefilter passes ~everything precisely in the big-pool
+    * the clamped 4M items — measured empirical FPP ≈ 0.94 (NOTES.md
+    * Round 17), i.e. the prefilter passes ~everything precisely in the big-pool
     * regime the bloom arm exists for. No false negatives either way (the
     * verify join always erases FPs — output was never wrong), but the
     * prefilter did no filtering.
     *
     * Shape: one BloomFilter.create(n, fpp) PER PARTITION built at scan
-    * parallelism (the measured-fast arm of BloomBuildProbe r17 — hashing
-    * dominates the build, so starving cores loses ~20%), then
-    * `treeReduce` merges partials EXECUTOR-side so the driver never
+    * parallelism (the measured-fast arm of the r17 build A/B, NOTES.md
+    * Round 17 — hashing dominates the build, so starving cores loses ~20%),
+    * then `treeReduce` merges partials EXECUTOR-side so the driver never
     * receives more than ~scale sketches (depth 3 past 256 MB/sketch keeps
-    * the final wave to ~2 partials even at 10^9-key pools where one
-    * sketch is 1.2 GB — the r16 coalesce's 38-GB-driver concern, solved
-    * without serializing the hash work). Precondition: n > 0 and the pool
-    * non-empty (callers dispatch on a measured count). */
+    * the final wave to ~2 partials even at 10^9-key pools where one sketch
+    * is 1.2 GB — the r16 coalesce's 38-GB-driver concern, solved without
+    * serializing the hash work). Precondition: n > 0 and the pool non-empty
+    * (callers dispatch on a measured count). */
   def buildPoolBloom(pool: DataFrame, colName: String, n: Long,
       fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
     import org.apache.spark.util.sketch.BloomFilter
@@ -343,7 +343,7 @@ object Curation {
     // every tree level ships partitions × sketchBytes, so cap build
     // partitions at an ~8 GB total-partial budget. At a 30M-key pool
     // (36 MB sketch) the cap is ~227 — scan parallelism untouched, the
-    // regime where BloomBuildProbe measured full parallelism winning; at
+    // regime where the r17 build A/B measured full parallelism winning; at
     // a 10^9-key pool (1.2 GB sketch) it coalesces to ~6 so the cluster
     // never materializes more than ~7 GB of partials at once (r17 review:
     // the r16 driver-traffic concern also applies to executor heap).
@@ -426,10 +426,10 @@ object Curation {
     // routes through bloom_filter_agg, which silently clamps the sketch
     // to the runtime-join-filter config caps (4M items / 2^26 bits), so a
     // big pool's "1% fpp" sketch actually ran at ~94% measured FPP and
-    // prefiltered nothing (BloomCapProbe; this also mis-priced the bloom
-    // arm in ClusterProbe r15's 214-400 s — most of that was the verify
-    // join eating the unfiltered corpus). buildPoolBloom sizes per the
-    // sketch API contract, builds at full scan parallelism, and
+    // prefiltered nothing (NOTES.md Round 17; this also mis-priced the
+    // bloom arm in the r15 cluster run's 214-400 s — most of that was the
+    // verify join eating the unfiltered corpus). buildPoolBloom sizes per
+    // the sketch API contract, builds at full scan parallelism, and
     // tree-merges partials executor-side (the r16 driver-traffic concern,
     // without the coalesce's measured ~20% parallelism loss).
     val bloom = buildPoolBloom(pool, "h", nPool, fpp)

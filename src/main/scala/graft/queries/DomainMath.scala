@@ -152,8 +152,8 @@ object DomainMath {
         (col("value").cast("long") % 3 === 0).as("uncalledGt")).as[SuppressRecord]
       // auto dispatch: plain hash partitioning when the chrom count already
       // levels the load (this table: 150k chroms), the exact segmented
-      // intra-chrom parallel path when single chroms dominate (W3Probe r13:
-      // segmented cost 14-29 s here vs plain 1.5 s at the 100x replica)
+      // intra-chrom parallel path when single chroms dominate (segmented cost
+      // 14-29 s here vs plain 1.5 s at the 100x replica; NOTES.md Round 14)
       OverlapSuppress.suppressAuto(recs)(s)
         .toDF()
         .select("chrom", "pos", "called", "uncalledGt")

@@ -112,12 +112,12 @@ object IntervalOps {
     // ----- W7: every-k-th-row downsample per group — the packed-key
     // selection form (round 14): the order key packs losslessly into one
     // long (l_orderkey*8 + l_linenumber, the o5 packing), so the rank
-    // pass that dominated the two-phase window form (W7Probe r13: ~6.4 s
-    // of ~10) collapses to a 12-byte/row shuffle + per-cell primitive
+    // pass that dominated the two-phase window form (~6.4 s of ~10; NOTES.md
+    // Round 14, w7 item) collapses to a 12-byte/row shuffle + per-cell primitive
     // Arrays.sort + direct emission of the k-th ranks. Same-window
     // 3-rep A/B at 100x: uniform-bounds window 8.3-11.0 s, packed
     // 3.5-6.6 s; skew replica 13.3 vs 5.3-6.1 s. r18 cell-sizing A/B
-    // (W7Probe, row-identity asserted): buckets/partition 2/4/8/16 =
+    // (OPTIMIZATION_r18.md §7, row-identity asserted): buckets/partition 2/4/8/16 =
     // 5.1/4.7/3.7/3.6 s cold, 3.8/3.4/3.4/3.4 s warm -> default now 8
     // (balance win; 16 only doubles the driver cell inventory for ~2%).
     // Exactness unchanged
@@ -151,8 +151,9 @@ object IntervalOps {
         (col("value") < 50).as("isRefCall")).as[graft.operators.GvcfRecord]
       // AUTO dispatch (round 13, mirror of w3's): this corpus has one
       // chrom per user_id — hash placement levels it and the segmented
-      // path's anchor machinery is overhead (W2Probe: segmented collects
-      // every solo record at rate 1 across 150k chroms); the genomics
+      // path's anchor machinery is overhead (segmented collects every solo
+      // record at rate 1 across 150k chroms; NOTES.md Round 14, w2 item);
+      // the genomics
       // regime (few giant contigs) still takes the segmented path, which
       // stays spec-proven identical to the sequential automaton
       graft.operators.BlockCompress.compressAuto(recs, mergeGqThreshold = 10)(s)

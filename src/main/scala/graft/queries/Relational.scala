@@ -274,13 +274,14 @@ object Relational {
       // uniform data too. Σ cnt over matching keys == the semi-join count.
       // (The exact side keys on (orderkey, partkey): the hot order fans
       // out over partkeys, so it needs no such routing.)
-      // Round-13 probe note (J8Probe): the broadcast alternative (distinct
-      // probe keys hinted broadcast on both sides) measured WORSE at the
-      // 100x replica — exact 4-6 -> 8-9 s — because the probe side is
-      // DATA-SCALED there (l_suppkey <= 50 selects ~5% of every copy,
-      // 3M pairs; the hashed-relation build dominates). The unhinted SMJ
-      // + AQE shape stands on evidence; raw scans are 0.2-0.4 s, so the
-      // cost IS the one unavoidable 60M-row pair-key exchange.
+      // Round-13 note (NOTES.md Round 14, j8/x5 item): the broadcast
+      // alternative (distinct probe keys hinted broadcast on both sides)
+      // measured WORSE at the 100x replica — exact 4-6 -> 8-9 s — because
+      // the probe side is DATA-SCALED there (l_suppkey <= 50 selects ~5% of
+      // every copy, 3M pairs; the hashed-relation build dominates). The
+      // unhinted SMJ + AQE shape stands on evidence; raw scans are
+      // 0.2-0.4 s, so the cost IS the one unavoidable 60M-row pair-key
+      // exchange.
       val loose = li.groupBy("l_orderkey").agg(count(lit(1)).as("cnt"))
         .join(probe.select("l_orderkey").distinct(), Seq("l_orderkey"), "left_semi")
         .agg(sum("cnt").as("n")).select(lit("loose").as("mode"), col("n"))
@@ -335,12 +336,12 @@ object Relational {
     // (n log n over the whole fact table) before keeping 5 per
     // (partition, stratum); the TopKBySim partial aggregate keeps a
     // 5-slot heap instead (n log k) — 6.6-6.9 -> 1.2-1.6 s at the 100x
-    // replica, bit-identical (O5Probe pin). The composite order
-    // (rnd ASC, okey ASC, linenum ASC) packs losslessly into the
+    // replica, bit-identical (NOTES.md Round 14, o5 item). The composite
+    // order (rnd ASC, okey ASC, linenum ASC) packs losslessly into the
     // aggregate's (sim DESC, id ASC): sim = -rnd, id = okey*8+linenum
-    // (l_linenumber in 1..7; both < 2^53 so the doubles are exact).
-    // Unpack uses integer `div`/`pmod` so the id math never rounds,
-    // whatever the key magnitude.
+    // (l_linenumber in 1..7; both < 2^53 so the doubles are exact). Unpack
+    // uses integer `div`/`pmod` so the id math never rounds, whatever the
+    // key magnitude.
     "o5_stratified_sample" -> { (s, d) =>
       val rnd = (col("l_orderkey") * lit(2654435761L) + col("l_linenumber") * lit(97L)) % lit(999999937L)
       val topk = udaf(new graft.functions.TopKBySim(5))
@@ -369,12 +370,12 @@ object Relational {
     // rule pushes the Aggregate below the join. Deduping first collapses
     // repeated keys in the map-side partial aggregate, so only ~distinct
     // keys reach any exchange: 5.0-8.4 -> 1.0-1.5 s at the 100x replica
-    // (U2Probe r13). distinct(a) semi b == distinct(a semi b); the one
-    // semantic difference from INTERSECT is null keys (INTERSECT matches
-    // NULL = NULL, a semi join's equality drops them) — these keys are
-    // non-null by schema. The win generalizes: fact-table key columns
-    // repeat heavily by nature, and when they don't, the extra partial
-    // agg is one map-side pass.
+    // (r13; NOTES.md Round 14, u2 item). distinct(a) semi b == distinct(a
+    // semi b); the one semantic difference from INTERSECT is null keys
+    // (INTERSECT matches NULL = NULL, a semi join's equality drops them) —
+    // these keys are non-null by schema. The win generalizes: fact-table
+    // key columns repeat heavily by nature, and when they don't, the extra
+    // partial agg is one map-side pass.
     "u2_intersect" -> { (s, d) =>
       val a = Tables.lineitem(s, d).select(col("l_partkey").as("k"))
       val b = Tables.part(s, d).filter(col("p_size") > 25).select(col("p_partkey").as("k"))
@@ -410,15 +411,16 @@ object Relational {
     // 5% (2.5x the configured 2% rsd) + a small-group absolute slack. The
     // oracle computes the exact counts and expects every group in bound —
     // a real correctness gate on the sketch, deterministic on both sides.
-    // Round 18 (DistinctProbe, /tmp/sf100, interleaved, checksum-identical
-    // sums): pre-deduplicate (event_type, user_id) BEFORE the aggregate —
-    // 2.0-3.0 s -> 0.8-1.8 s. The mixed exact-distinct + HLL form paid one
-    // HLL register update per EVENT ROW; after the distinct the sketch and
-    // the exact count both run over distinct pairs only (fact-row count /
-    // dup factor). Results are bit-identical: count(user_id) over distinct
-    // pairs IS count_distinct (both skip nulls), and HLL is duplicate-
-    // idempotent (same hash -> same register max), so the estimate — and
-    // the oracle-gated sketch_ok — cannot move.
+    // Round 18 (OPTIMIZATION_r18.md §6; 100x replica, interleaved,
+    // checksum-identical sums): pre-deduplicate (event_type, user_id)
+    // BEFORE the aggregate — 2.0-3.0 s -> 0.8-1.8 s. The mixed
+    // exact-distinct + HLL form paid one HLL register update per EVENT ROW;
+    // after the distinct the sketch and the exact count both run over
+    // distinct pairs only (fact-row count / dup factor). Results are
+    // bit-identical: count(user_id) over distinct pairs IS count_distinct
+    // (both skip nulls), and HLL is duplicate-idempotent (same hash ->
+    // same register max), so the estimate — and the oracle-gated sketch_ok
+    // — cannot move.
     "a18_approx_distinct" -> { (s, d) =>
       Tables.events(s, d)
         .select(col("event_type"), col("user_id")).distinct()

@@ -506,16 +506,16 @@ object Similarity {
     * d6 invocation — the exact accumulation class ReportGrid's jcAgg memo
     * fixed). Contents deterministic per (session, dir).
     *
-    * Storage level DISK_ONLY (r18, VERDICT r17 #4 — measured, not
-    * asserted): D6PersistProbe at the 100x replica, interleaved arms,
-    * 10.26M pairs checksum-identical: persist ~2.4-2.5 s vs recompute
-    * 4.3-5.2 s (the O(C)-per-row argmax re-ran on both join sides), and
-    * DISK_ONLY == MEMORY_AND_DISK on wall (2.5 vs 2.4 s — the columnar
-    * batches stream back from NVMe as fast as the pool serves them). The
-    * frame carries FULL VECTORS and is corpus-sized at the dedup sizing,
-    * so at 100 TB MEMORY_AND_DISK would compete with the join's execution
-    * memory exactly when it is needed most; DISK_ONLY keeps the measured
-    * 2x recompute win with zero unified-pool pressure. */
+    * Storage level DISK_ONLY (r18, VERDICT r17 #4 — measured, not asserted,
+    * OPTIMIZATION_r18.md §5): at the 100x replica, interleaved arms, 10.26M
+    * pairs checksum-identical: persist ~2.4-2.5 s vs recompute 4.3-5.2 s
+    * (the O(C)-per-row argmax re-ran on both join sides), and DISK_ONLY ==
+    * MEMORY_AND_DISK on wall (2.5 vs 2.4 s — the columnar batches stream
+    * back from NVMe as fast as the pool serves them). The frame carries
+    * FULL VECTORS and is corpus-sized at the dedup sizing, so at 100 TB
+    * MEMORY_AND_DISK would compete with the join's execution memory exactly
+    * when it is needed most; DISK_ONLY keeps the measured 2x recompute win
+    * with zero unified-pool pressure. */
   private val d6AssignMemo = new LruFrameMemo[(Int, String), DataFrame](
     max = 4,
     ensurePersisted = df =>
@@ -546,10 +546,10 @@ object Similarity {
     * exchange VOLUME is every scored candidate. The aggregate keeps a
     * k-slot bounded heap per (partition, qid) map-side, so the exchange
     * carries partitions×queries k-entry buffers — independent of the
-    * collection size. Tie-break (sim DESC, vec_id ASC) is identical to
-    * the windows', so output is bit-identical (E1Probe pins equality;
-    * measured 9.4-10.5 → 3.8-5.0 s at the 100x replica for e1). `sims`
-    * must carry (qid, vec_id, `simName`). */
+    * collection size. Tie-break (sim DESC, vec_id ASC) is identical to the
+    * windows', so output is bit-identical (equality pinned in the r14 A/B,
+    * NOTES.md Round 14; measured 9.4-10.5 → 3.8-5.0 s at the 100x replica
+    * for e1). `sims` must carry (qid, vec_id, `simName`). */
   private def topkPerQid(sims: DataFrame, simName: String, k: Int): DataFrame = {
     val topk = udaf(new graft.functions.TopKBySim(k))
     sims.groupBy("qid").agg(topk(col(simName), col("vec_id")).as("tk"))

@@ -201,13 +201,12 @@ object TextDedup {
     * unchanged. The candidate-pair LIST for verification (d3/d4) still
     * needs [[lshPairs]]; this is only for consumers that need
     * connectivity, not the pairs themselves. Public: custom CC consumers
-    * (and D7Probe's stage split) want the edge set without the pair
-    * list. */
-  def bandStarEdges(mh: DataFrame, pinMerge: Boolean = false): DataFrame = {
+    * want the edge set without the pair list. */
+  def bandStarEdges(mh: DataFrame): DataFrame = {
     val bands = bandRows(mh)
     // join-back lands on the keys the aggregate shuffled on — no second
     // exchange (same layout trick as lshPairs). Deliberately NOT
-    // merge-hinted by default, unlike pairScoresGrouped's join-backs
+    // merge-hinted, unlike pairScoresGrouped's join-backs
     // (r17): the build side here is the bc>=2-filtered AGGREGATE sitting
     // above its own materialized shuffle stage, so AQE sizes the
     // broadcast decision from RUNTIME stats, not the parquet static
@@ -215,13 +214,12 @@ object TextDedup {
     // stream with no shuffle below it — nothing measured). Small multi
     // set (the real-corpus low-dup case) → broadcast that skips
     // re-shuffling the giant exploded band stream; huge multi set → AQE's
-    // re-optimization keeps the merge join. D7EdgesProbe measures the
-    // anti-lever (pinMerge=true) against this adaptive default at the
-    // 100x replica.
+    // re-optimization keeps the merge join. A merge-pinned join was A/B'd
+    // against this adaptive form at the 100x replica and did not win
+    // (NOTES.md Round 17, bandStarEdges item).
     val stats = bands.groupBy("bid", "k1", "k2")
       .agg(count(lit(1)).as("bc"), min("doc_id").as("mindoc"))
-    bands.join(if (pinMerge) stats.hint("merge") else stats,
-        Seq("bid", "k1", "k2"))
+    bands.join(stats, Seq("bid", "k1", "k2"))
       .filter(col("bc") >= 2 && col("doc_id") =!= col("mindoc"))
       .select(col("mindoc").as("doc_a"), col("doc_id").as("doc_b"))
       .distinct()
@@ -483,21 +481,21 @@ object TextDedup {
     val multi = bands.groupBy("bid", "k1", "k2").agg(count(lit(1)).as("bc"))
       .filter(col("bc") >= 2)
     // join-back lands on the aggregate's own key layout — no extra
-    // exchange. MERGE-hinted (r16, D3PlanPeek): both sides are band-key-
-    // cardinality ~ corpus-sized, but a parquet signature input's STATIC
-    // stats under-estimate the exploded band stream (post-Generate size ≈
-    // the 32-MB file), so Catalyst planned BuildLeft broadcasts of the
-    // full banded stream — a driver-built 0.5-1 GB hashed relation at the
-    // 100x replica (store arm 26-50 s vs the memo arm's accurate-stats
-    // SMJ plan at 19.6-30 s, D3StoreProbe, pre-hint). The hint pins the
-    // layout-reusing shuffle plan the operator was designed around,
-    // whatever the input's stats source. POST-hint r17 measurement
-    // (D3StoreProbe /tmp/sf100, 3 interleaved reps, slow window spin
-    // ~2.0 s): store 27.35/20.74/21.54 s vs memo 21.54/20.03/19.74 s —
-    // the broadcast pathology is gone; the residual ~5% is the parquet
-    // scan the memo arm skips because its signature build shares the
-    // token-hash memo the shingle side already paid for. Checksums
-    // identical every rep (22,574,543 pairs). PlanSpec positively pins
+    // exchange. MERGE-hinted (r16; NOTES.md Round 16): both sides are
+    // band-key-cardinality ~ corpus-sized, but a parquet signature input's
+    // STATIC stats under-estimate the exploded band stream (post-Generate
+    // size ≈ the 32-MB file), so Catalyst planned BuildLeft broadcasts of
+    // the full banded stream — a driver-built 0.5-1 GB hashed relation at
+    // the 100x replica (store arm 26-50 s vs the memo arm's accurate-stats
+    // SMJ plan at 19.6-30 s, pre-hint). The hint pins the layout-reusing
+    // shuffle plan the operator was designed around, whatever the input's
+    // stats source. POST-hint r17 measurement (NOTES.md Round 17; 100x
+    // replica, 3 interleaved reps, slow window spin ~2.0 s): store
+    // 27.35/20.74/21.54 s vs memo 21.54/20.03/19.74 s — the broadcast
+    // pathology is gone; the residual ~5% is the parquet scan the memo arm
+    // skips because its signature build shares the token-hash memo the
+    // shingle side already paid for. Checksums identical every rep
+    // (22,574,543 pairs). PlanSpec positively pins
     // both SMJ join-backs so the hint cannot silently revert.
     val banded = bands.join(multi.hint("merge"), Seq("bid", "k1", "k2"))
       .select(col("doc_id"), col("bid"), col("k1"), col("k2"), col("sig"))
@@ -839,10 +837,10 @@ object TextDedup {
     // Round 14 (VERDICT r13 #6): the star-edge build reads the AT-REST
     // signature table (ensure = build-once; x19 is the priced build) —
     // the d-family's common signature prefix collapses across sessions,
-    // not just within one. D7Probe same-window A/B at 100x: registered
-    // cold 13.0-17.9 s (memo path) -> 6.3-8.5 s from the store. First
-    // run on a fresh store pays the one-time ensure-build; every later
-    // session scans.
+    // not just within one. Same-window A/B at 100x (NOTES.md Round 14):
+    // registered cold 13.0-17.9 s (memo path) -> 6.3-8.5 s from the store.
+    // First run on a fresh store pays the one-time ensure-build; every
+    // later session scans.
     "d7_dedup_resolve" -> { (s, d) =>
       val mh = s.read.parquet(AtRest.ensureSignatures(s, d))
       graft.operators.Dedup.connectedComponents(bandStarEdges(mh))
@@ -859,15 +857,15 @@ object TextDedup {
     // gate, and exact-dedup survivorship composed in one job (what a real
     // training-data run executes: scalar scoring in codegen, then ONE
     // groupBy + join on the dedup key).
-    // Round-13 probe note (X5Probe): the min-over-pkey WINDOW alternative
-    // measured ~15% faster at both 100x replicas (7.0-7.3 -> 6.0-6.1 s,
-    // equal output) — and is rejected anyway: survivorship keys are
-    // content hashes, so a mass-duplicated document IS the hot-key case
-    // this query exists for, and a WindowExec partition cannot be split
-    // (one task sorts the whole duplicate group) while the join form's
-    // hot partitions ride AQE's skew-join split. The skew replica's 50k-row
-    // hot group is too small to show the cliff; at lake scale it's the
-    // difference between a task and an OOM.
+    // Round-13 note (NOTES.md Round 14, j8/x5 item): the min-over-pkey
+    // WINDOW alternative measured ~15% faster at both 100x replicas
+    // (7.0-7.3 -> 6.0-6.1 s, equal output) — and is rejected anyway:
+    // survivorship keys are content hashes, so a mass-duplicated document
+    // IS the hot-key case this query exists for, and a WindowExec partition
+    // cannot be split (one task sorts the whole duplicate group) while the
+    // join form's hot partitions ride AQE's skew-join split. The skew
+    // replica's 50k-row hot group is too small to show the cliff; at lake
+    // scale it's the difference between a task and an OOM.
     "x5_curation_pipeline" -> { (s, d) =>
       val toks = Text.tokens(col("text"))
       val scored = Tables.documents(s, d)
@@ -906,12 +904,12 @@ object TextDedup {
       // term-frequency table every TF-IDF consumer scans —
       // [[termFrequenciesToParquet]] + [[tfidfTopKFromParquet]] are that
       // form; this query stays self-contained on the raw table.
-      // Round-13 probe note (X12Probe): the dominant stage is the 28M-row
-      // CACHE BUILD (~12 s of ~17 at 100x), not the groupBy shuffle — the
-      // shuffle-free native graft_term_counts alternative measured
-      // equal-or-WORSE locally (boxing cost real, NVMe shuffle ~free) and
-      // stays a library expression for network-shuffle clusters; the
-      // no-persist recompute forms measured 25+ s. This shape stands on
+      // Round-13 note (NOTES.md Round 14, u2/x12 item): the dominant stage
+      // is the 28M-row CACHE BUILD (~12 s of ~17 at 100x), not the groupBy
+      // shuffle — the shuffle-free native graft_term_counts alternative
+      // measured equal-or-WORSE locally (boxing cost real, NVMe shuffle
+      // ~free) and stays a library expression for network-shuffle clusters;
+      // the no-persist recompute forms measured 25+ s. This shape stands on
       // evidence.
       val tf = termFrequencies(docs).persist()
       tf.count()

@@ -260,8 +260,8 @@ class VcfScan(path: String, sampleIndex: Int, splitBytes: Long,
       // but a 100k-part foreign directory would serialize 100k FS opens
       // inside planning — fan the reads over a bounded pool and surface
       // the FIRST mismatch in file order (deterministic messages).
-      // Measured under the ObjStoreProbe latency shim (25 ms/open, 2000
-      // files): sequential walk 51.8 s, this pool 3.6 s (OBJSTORE.json) —
+      // Measured under a per-open latency shim (25 ms/open, 2000 files):
+      // sequential walk 51.8 s, this pool 3.6 s (OBJSTORE.json) —
       // the object-store pricing is no longer an argument. The
       // worker only builds the message; require stays on the driver
       // thread so the error type/text matches the sequential walk.

@@ -58,7 +58,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("two-phase rankers carry no Scala UDF (native graft_bucket + literal offsets)") {
-    // prCurveScalable/everyKthScalable used 4 per-row Scala UDFs for the
+    // prCurveScalable/everyKthWithBounds used 4 per-row Scala UDFs for the
     // bucket tag and the offset lookups — serialization boundaries in the
     // hottest per-row stage. The native BucketBin expression + element_at
     // literal arrays must keep the whole stage in codegen.
@@ -128,8 +128,8 @@ class PlanSpec extends SparkSpec {
       // any broadcast join in a band plan must be a SEMI join (x17's
       // batch-proportional touched-bands prefilter) — an INNER
       // BroadcastHashJoin here means Catalyst built a corpus-sized hashed
-      // relation on the driver (the r16 D3StoreProbe scale-killer: parquet
-      // static stats under-estimate the exploded band stream)
+      // relation on the driver (the r16 scale-killer, NOTES.md Round 16:
+      // parquet static stats under-estimate the exploded band stream)
       "(?m)^.*BroadcastHashJoin.*$".r.findAllIn(p).foreach { line =>
         assert(line.contains("LeftSemi"),
           s"$q plans a non-semi broadcast join (corpus-sized build side): $line")

@@ -112,28 +112,6 @@ class OrderedSpec extends SparkSpec {
     }
   }
 
-  test("everyKthScalable equals the windowed everyKth on multi-partition data") {
-    val rnd = new scala.util.Random(31)
-    val df = (1 to 5000).map(i => (s"g${i % 3}", rnd.nextInt(1000000) * 10 + i))
-      .toDF("g", "o")
-    def collect(out: org.apache.spark.sql.DataFrame) =
-      out.collect().map(r => (r.getString(0), r.getInt(1))).toSet
-    val windowed = collect(Ordered.everyKth(df, "g", Seq("o"), 7))
-    val scalable = collect(Ordered.everyKthScalable(df, "g", Seq("o"), 7))
-    assert(scalable == windowed && windowed.nonEmpty)
-    // the uniform-bucket form (one min/max agg instead of the quantile
-    // sketch; boundaries steer only balance, never ranks) is exact too
-    val uniform = collect(Ordered.everyKthScalableUniform(df, "g", Seq("o"), 7))
-    assert(uniform == windowed)
-    // skewed key mass (80% of rows on ONE bucketing-key value, which no
-    // boundary set may split): both scalable forms stay exact
-    val skewed = ((1 to 4000).map(i => (s"g${i % 3}", 5000000 * 10 + i % 7)) ++
-      (1 to 1000).map(i => (s"g${i % 3}", rnd.nextInt(1000000) * 10))).toDF("g", "o")
-    val wSkew = collect(Ordered.everyKth(skewed, "g", Seq("o"), 7))
-    assert(collect(Ordered.everyKthScalable(skewed, "g", Seq("o"), 7)) == wSkew)
-    assert(collect(Ordered.everyKthScalableUniform(skewed, "g", Seq("o"), 7)) == wSkew)
-  }
-
   test("everyKthPacked equals the windowed everyKth (uniform, skew, duplicates, fallbacks)") {
     import org.apache.spark.sql.functions.col
     val rnd = new scala.util.Random(47)
@@ -168,8 +146,6 @@ class OrderedSpec extends SparkSpec {
     val wNg = multiset(Ordered.everyKth(nullG, "g", Seq("o"), 7).select("g", "o"))
     assert(multiset(Ordered.everyKthPacked(nullG, "g", col("o"), 7)) == wNg)
     assert(multiset(Ordered.everyKthPacked(nullG, "g", col("o"), 7, maxCellRows = 10)) == wNg)
-    assert(multiset(Ordered.everyKthScalableUniform(nullG, "g", Seq("o"), 7)
-      .select("g", "o")) == wNg)
     assert(wNg.exists(_._1 == null), "fixture must exercise the null group")
     // empty input
     assert(Ordered.everyKthPacked(df.limit(0), "g", col("o"), 7).count() == 0)
@@ -190,25 +166,33 @@ class OrderedSpec extends SparkSpec {
       "past maxCells the packed path must yield to the per-group window")
   }
 
-  test("scalable every-kth handles NULL bucketing keys like the window (mixed and all-null)") {
-    def collect(out: org.apache.spark.sql.DataFrame) =
-      out.collect().map(r => (r.getString(0), r.getInt(2))).toSet
+  test("everyKthPacked handles NULL bucketing keys like the window (mixed and all-null)") {
+    import org.apache.spark.sql.functions.col
+    // packed key (o, t) -> o * 1024 + t, null whenever o is null; the window
+    // orders by (o, t), so both forms rank the same rows and null-key ties
+    // emit the same (null) values
+    def packed(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("p", col("o").cast("long") * 1024 + col("t"))
+    def multiset(out: org.apache.spark.sql.DataFrame): Seq[(String, Any)] =
+      out.collect().map(r => (r.getString(0), r.get(1))).toSeq
+        .sortBy(t => (String.valueOf(t._1), String.valueOf(t._2)))
+    def window(df: org.apache.spark.sql.DataFrame, k: Int) =
+      multiset(Ordered.everyKth(packed(df), "g", Seq("o", "t"), k).select("g", "p"))
     // mixed: every 5th key null — nulls sort first in the window; the
-    // scalable forms route them to the dedicated -1 bucket
+    // packed form falls back to the windowed form's dedicated -1 bucket
     val mixed = (1 to 300).map(i =>
       (s"g${i % 3}", if (i % 5 == 0) None else Some(i * 37 % 997), i))
       .toDF("g", "o", "t")
-    val wMixed = collect(Ordered.everyKth(mixed, "g", Seq("o", "t"), 7))
-    assert(collect(Ordered.everyKthScalable(mixed, "g", Seq("o", "t"), 7)) == wMixed)
-    assert(collect(Ordered.everyKthScalableUniform(mixed, "g", Seq("o", "t"), 7)) == wMixed)
+    val wMixed = window(mixed, 7)
+    assert(multiset(Ordered.everyKthPacked(packed(mixed), "g", col("p"), 7)) == wMixed)
     assert(wMixed.nonEmpty)
-    // all-null bucketing key: min/max agg sees null — must DEGRADE to the
-    // single-bucket path, not drop rows (the r13 review catch)
+    // all-null bucketing key: the min/max agg sees null — must DEGRADE to
+    // the empty-bounds single-bucket path, not drop rows (the r13 review
+    // catch)
     val allNull = (1 to 40).map(i => (s"g${i % 2}", None: Option[Int], i))
       .toDF("g", "o", "t")
-    val wNull = collect(Ordered.everyKth(allNull, "g", Seq("o", "t"), 3))
-    assert(collect(Ordered.everyKthScalableUniform(allNull, "g", Seq("o", "t"), 3)) == wNull)
-    assert(collect(Ordered.everyKthScalable(allNull, "g", Seq("o", "t"), 3)) == wNull)
+    val wNull = window(allNull, 3)
+    assert(multiset(Ordered.everyKthPacked(packed(allNull), "g", col("p"), 3)) == wNull)
     assert(wNull.nonEmpty)
   }
 

@@ -105,8 +105,8 @@ class CurationSpec extends SparkSpec {
     val exact = norm(Curation.decontaminateAgainstPool(corpus, pool, minShared = 3))
     assert(exact.nonEmpty, "corpus too thin — dispatch equality would be vacuous")
 
-    // pool under the cap -> the EXACT arm must fire (ClusterProbe r15:
-    // exact broadcast wins 4-8x at broadcastable pools)
+    // pool under the cap -> the EXACT arm must fire (r15 cluster run,
+    // NOTES.md Round 15: exact broadcast wins 4-8x at broadcastable pools)
     val (underDf, underArm) = Curation.autoAgainstPoolPlan(
       corpus, pool, minShared = 3, fpp = 0.01, exactCap = Curation.EXACT_POOL_CAP)
     assert(underArm == "exact", s"small pool must take the exact arm, got $underArm")

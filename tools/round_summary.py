@@ -1,18 +1,33 @@
 #!/usr/bin/env python3
 """Summarize the committed bench artifacts for the round's NOTES bullet:
 baseline ratio on the shared query set, skew/uniform ratio, worst ratios,
-and per-query deltas vs the previous round's committed artifacts."""
+and per-query deltas vs the previous round's committed artifacts.
+
+Usage (from the repo root): tools/round_summary.py [BENCH_LOCAL_<sf>_c<cores>.json]
+Without an argument it reads the newest BENCH_LOCAL_*.json by mtime."""
+import argparse
+import glob
 import json
+import os
+import sys
 
 
 def load(p):
     return json.load(open(p))
 
 
-try:  # r18: the bench stamps sf + cores into the artifact name
-    loc = load("BENCH_LOCAL_sf0.1_c32.json")
-except FileNotFoundError:
-    loc = load("BENCH_LOCAL.json")
+ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+ap.add_argument("local", nargs="?",
+                help="local bench artifact (default: newest BENCH_LOCAL_*.json)")
+args = ap.parse_args()
+local = args.local
+if local is None:
+    cands = glob.glob("BENCH_LOCAL_*.json")
+    if not cands:
+        sys.exit("no BENCH_LOCAL_*.json here; pass the artifact path")
+    local = max(cands, key=lambda p: (os.path.getmtime(p), p))
+print(f"local artifact: {local}")
+loc = load(local)
 uni = load("BENCH_UNIFORM100.json")
 skw = load("BENCH_SKEW100.json")
 # BENCH_r01.json stores the driver's truncated tail; recover the queries
